@@ -1,15 +1,17 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main — driver contract: print ONE JSON line
   * `{"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}`.
   *
   * Times every `SparkEntry.queries` entry end-to-end (plan + execute +
-  * count) on `SPARK_GRAFT_SF_DIR`. Uses [[Sessions.local]] so the session
-  * invariants (UTC, nanosAsLong, shuffle partitions = cores, AQE) match
-  * Verify — a query that only works under Verify's session would otherwise
-  * silently time as a failure here.
+  * count) on `SPARK_GRAFT_SF_DIR`, or only the queries whose names start
+  * with one of the optional argument prefixes (the targeted A/B form).
+  * Uses [[Sessions.local]] so the session invariants (UTC, nanosAsLong,
+  * shuffle partitions = cores, AQE) match Verify — a query that only
+  * works under Verify's session would otherwise silently time as a
+  * failure here.
+  *
+  * Usage: sbt "runMain graft.Bench [prefix ...]"
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -21,27 +23,36 @@ object Bench {
       try graft.catalog.Tables.load(spark, sfDir, n).count()
       catch { case _: Throwable => () }
     }
-    // min of two timed executions per query: steady-state timing. The
-    // host's wall-clock swings 2-4x under noisy neighbors (BASELINE.md
-    // bench log); the min of two runs discards stalls the code didn't
-    // cause while still including plan+execute end-to-end.
-    val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
+      .filter { case (n, _) => args.isEmpty || args.exists(n.startsWith) }
+    // min of two timed executions per query: the host's wall-clock swings
+    // 2-4x under noisy neighbors (BASELINE.md bench log); the min of two
+    // runs discards stalls the code didn't cause while still including
+    // plan+execute end-to-end. The SQL cache is cleared after EVERY rep,
+    // so rep 2 never reads a relation rep 1 persist()ed and no query's
+    // cache leaks into the next: both reps are cold for the query's own
+    // work.
+    val results = selected.flatMap { case (name, fn) =>
       val times = (1 to 2).map { _ =>
         val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch {
+        try {
+          fn(spark, sfDir).count()
+          Some((System.nanoTime() - t0) / 1e9)
+        } catch {
           case e: Throwable =>
             System.err.println(
               s"[bench] $name failed: ${String.valueOf(e.getMessage).take(200)}")
-        }
-        (System.nanoTime() - t0) / 1e9
+            None
+        } finally spark.sqlContext.clearCache()
       }
-      // queries that persist() a reduced intermediate (q102/q133/q135/...)
-      // would otherwise leave it cached for the whole run: evict between
-      // queries so storage memory doesn't accumulate 146 queries deep and
-      // each query's sample stays self-contained. (Within the two reps
-      // the cache stays warm — min-of-2 measures steady state.)
-      spark.sqlContext.clearCache()
-      name -> times.min
+      // a query that throws adds no time: a broken query must never make
+      // the total smaller. It is left out of `queries` and the total and
+      // named on stderr.
+      if (times.forall(_.isDefined)) Some(name -> times.flatten.min)
+      else {
+        System.err.println(s"[bench] $name excluded: a rep failed")
+        None
+      }
     }
     // per-query seconds rounded to ms in the PRINTED json only (the
     // timing methodology is unchanged): round 10's full-precision line

@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   * map-side pair enumeration over the sorted basket array. The self-join
   * formulation would scan + shuffle lineitem twice — Spark's exchange
   * reuse does not fire across differently-aliased branches (verified with
-  * tools.FinalPlan). Expansion is bounded by basket size (≤ 7 lines per
+  * tools.Explain). Expansion is bounded by basket size (≤ 7 lines per
   * order in the TPC-H shape ⇒ ≤ 21 pairs), so the blowup is a small
   * constant and the op stays linear at 100 TB.
   */

@@ -83,7 +83,7 @@ import scala.util.Try
   * [[BandJoinBlocking]] tiles it alongside the hamming segments —
   * pruning exactly the large-norm candidate mass, which buys a wider
   * hamming ball (m+1) at the same candidate budget: more recall, same
-  * cost (measured in SrpJoinProbe's unnormalized arm). If M truly
+  * cost (measured by `ScaleLaw SrpNormBand`). If M truly
   * bounds the norms the band costs zero recall (theorem above); if it
   * does not, the contract is still exactly the deterministic,
   * oracle-reproducible {original ∧ ham ∧ band} set.

@@ -62,7 +62,7 @@ import org.apache.spark.sql.types._
   * ExtractEquiJoinKeys then sees the struct-field equalities (plus any
   * composed user keys) and plans a hash/sort-merge join: candidate
   * generation drops from |L|·|R| to Σ_bucket |bucket|² — the measured
-  * q63/SrpScaleProbe behavior — with zero changes to user code.
+  * q63/`ScaleLaw SrpScale` behavior — with zero changes to user code.
   *
   * LEFT SEMI / LEFT ANTI / LEFT OUTER (round 8) have per-LEFT-ROW
   * semantics: the left gains a row id and [[RewriteSupport]] collapses

@@ -497,7 +497,7 @@ object SetSimilarityJoinBlocking extends Rule[LogicalPlan]
         // skewed vocabularies: token ids are assigned by frequency,
         // so the ubiquitous smallest id is the minimal element of
         // MOST sets and its bucket goes quadratic (measured in
-        // ContainSkewProbe). `spark.graft.setsim.stopTokens` (the
+        // `ScaleLaw ContainSkew`). `spark.graft.setsim.stopTokens` (the
         // PPJoin stats-out-of-band doctrine, STRING elements) demotes
         // the listed hot tokens to the END of the order, so the probe
         // key becomes the RAREST available element and the hot bucket
@@ -525,7 +525,7 @@ object SetSimilarityJoinBlocking extends Rule[LogicalPlan]
         // SIZE ESTIMATE outgrows the broadcast threshold the
         // planner falls to CartesianProduct — a full |L|·|R| loop
         // for a branch that is almost always EMPTY at runtime
-        // (measured: 15× cliff at 236k rows in ContainScaleProbe
+        // (measured: 15× cliff at 236k rows in `ScaleLaw ContainScale`
         // before this hint). ∅-set rows are rare by nature; were
         // they numerous, the branch's output is |L∅|·|R| by
         // definition and no plan shape saves it.

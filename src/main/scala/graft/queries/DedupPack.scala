@@ -74,7 +74,7 @@ object DedupPack extends QueryPack {
   /** General exact-Jaccard pair join — the DELIBERATELY-NAIVE O(n²/blocks)
     * pedagogical foil (its scalable twins are q61 canonical grouping and
     * q62 MinHash LSH; the quadratic-vs-LSH law lives in
-    * [[graft.tools.DedupScaleProbe]]). Kept on a FIXED-SIZE demonstration
+    * `ScaleLaw DedupScale`). Kept on a FIXED-SIZE demonstration
     * slice (1-in-4 systematic sample ∩ doc_id < 1200 — a no-op at the
     * sf0.01 gate, constant above sf0.1) so a by-design-quadratic query
     * cannot distort cross-round wall-time records at higher SFs (the r10
@@ -337,7 +337,7 @@ object DedupPack extends QueryPack {
     * separate aggregates): each token's md5 contributes ±1 per bit via
     * nibble arithmetic, then the sign vector assembles against a
     * literal power-of-two array. No lang blocking — at production
-    * width the hamming ball alone is selective (the SrpScaleProbe
+    * width the hamming ball alone is selective (the SrpScale
     * width law), so the operator needs no metadata crutch.
     */
   /** (doc_id, sig): the 60-bit SimHash over a (doc_id, ts tokens)

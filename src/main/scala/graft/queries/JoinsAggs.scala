@@ -421,7 +421,7 @@ object JoinsAggs extends QueryPack {
       // key-grain cache: totals then read off the already-reduced counts
       // (Σn = rows, row count = distinct keys) — without it Spark re-scans
       // the fact table for the scalar branch (exchange reuse does not
-      // fire across the branches; tools.FinalPlan)
+      // fire across the branches; tools.Explain)
       .persist()
     val totals = counts.agg(sum("n").as("tot"), count(lit(1)).as("nd"))
     counts.crossJoin(broadcast(totals))

@@ -301,7 +301,7 @@ object LakehousePack extends QueryPack {
     * m·ln(m/V) when the raw estimate ≤ 2.5m and zero registers remain
     * (the small-range regime the low-NDV columns like o_orderstatus live
     * in). Exact ndv rides alongside as the audit; SketchSpec bounds
-    * |rel_err| per regime and `tools.NdvSketchProbe` measures the error
+    * |rel_err| per regime and `ScaleLaw NdvSketch` measures the error
     * law as distinct counts grow 10³→10⁶ at CONSTANT 64-register state.
     *
     * Scale: the profile's cost model flips — exact multi-distinct

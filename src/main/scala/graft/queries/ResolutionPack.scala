@@ -45,7 +45,7 @@ object ResolutionPack extends QueryPack {
         sequence(lit(1), length(nm) - (l - lit(1))), i => nm.substr(i, l))))
 
   /** Blocking gram length from registry size: |Σ|^ℓ ≫ n, the
-    * ErScaleProbe law (~10-char effective alphabet on id-bearing names:
+    * ErScale law (~10-char effective alphabet on id-bearing names:
     * 10³ keys carry ≲30 k records at tiny blocks, 10⁴ ≲100 k, then 5).
     * Shared by q251 (which sizes n from the stats-only base count ×
     * the fixed 5/4 dup expansion — a size class, not an exact census)
@@ -74,7 +74,7 @@ object ResolutionPack extends QueryPack {
     *     blowup (the q63 lesson). The BLOCKING gram length is AUTO-SIZED
     *     from the registry (r6): [[blockLenOf]] picks ℓ ∈ {3,4,5} so the
     *     key space outgrows the corpus (|Σ|^ℓ ≫ n, the ER analogue of
-    *     SimHash width ~2·log₂ n) — [[graft.tools.ErScaleProbe]] measures
+    *     SimHash width ~2·log₂ n) — `ScaleLaw ErScale` measures
     *     fixed 3-grams going ×4 per corpus doubling (digit-gram space
     *     saturates) where 5-grams hold ×~2 with identical 100% planted
     *     recall, and its auto-ℓ arm tracks the good curve at every k. The

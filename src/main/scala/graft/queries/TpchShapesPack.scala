@@ -273,7 +273,7 @@ object TpchShapesPack extends QueryPack {
     * already cut to a sliver, so the extra hash exchange on l_partkey
     * moves almost nothing. The agg-then-join-back alternative reads the
     * candidate lineage TWICE (Spark's exchange reuse does not fire across
-    * the differently-pruned branches; verified with tools.FinalPlan), and
+    * the differently-pruned branches; verified with tools.Explain), and
     * at 100 TB the second (part, supp) reduction of lineitem costs more
     * than the small window shuffle saved.
     *
@@ -340,7 +340,7 @@ object TpchShapesPack extends QueryPack {
         .as("value_cents"))
       // part-grain intermediate: cached so the scalar-total branch reads
       // the cache instead of re-reducing lineitem (exchange reuse does not
-      // fire across the branches; tools.FinalPlan). Key-grain ⇒ MBs–GBs
+      // fire across the branches; tools.Explain). Key-grain ⇒ MBs–GBs
       // at 100 TB, safely cluster-cacheable.
       .persist()
     val tot = value.agg(sum("value_cents").as("tot_cents"))

@@ -92,7 +92,7 @@ class PlanShapeSpec extends SparkSpecBase {
   test("scalar-threshold branches read a cached key-grain intermediate") {
     // q102/q135/q136/q139/q146: the filter branch and the scalar branch
     // both consume the persisted reduced aggregate — the fact table must
-    // not be re-scanned for the scalar (tools.FinalPlan audit)
+    // not be re-scanned for the scalar (tools.Explain audit)
     for (name <- Seq("q102_heavy_hitters", "q136_top_supplier",
         "q146_anomaly_days")) {
       val p = planOf(q(name))
@@ -244,7 +244,7 @@ class PlanShapeSpec extends SparkSpecBase {
     // pin on the OPTIMIZED LOGICAL plan: the executed-plan string nests
     // whole AdaptiveSparkPlans (with their own Initial sections) inside
     // InMemoryRelation blocks, so section-splitting truncates the tree
-    // (the FinalPlan trap, compounded); the logical tree shows each cache
+    // (the final-plan trap, compounded); the logical tree shows each cache
     // read as one InMemoryRelation node with no nesting
     import org.apache.spark.sql.execution.columnar.InMemoryRelation
     val lp = q("q172_semdedup").queryExecution.optimizedPlan
