@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Single place that encodes the session-level invariants every graft
-  * entrypoint (Verify, Bench, Smoke, tests) relies on.
+  * entrypoint (Verify, Bench, Explain, ScaleLaw, tests) relies on.
   *
   * Invariants:
   *   - `spark.sql.session.timeZone = UTC`: oracle parity — DuckDB treats the

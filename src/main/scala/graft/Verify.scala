@@ -8,39 +8,17 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
-    // optional 3rd arg (local iteration only; the driver passes two):
-    // comma-separated name prefixes to restrict the dump to
-    val only = args.lift(2).map(_.split(',').toSeq)
-    def selected(name: String) = only.forall(_.exists(name.startsWith))
     val spark = Sessions.local("graft-verify")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.filter(kv => selected(kv._1)).foreach {
-      case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(
-          s"[verify] $name failed: ${String.valueOf(e.getMessage).take(300)}")
+    // optional 3rd arg (local iteration only; the oracle gate passes two):
+    // comma-separated name prefixes to restrict the dump to
+    QueryLoop.select(args.lift(2).toSeq.flatMap(_.split(','))).foreach { case (name, fn) =>
+      QueryLoop.once(spark, "verify", name) {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
       }
-      // evict any intermediate a query persist()ed (q102/q133/... cache a
-      // reduced aggregate) so storage memory stays flat across the run
-      spark.sqlContext.clearCache()
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      QueryLoop.json(SparkEntry.oracleSql.toSeq.sortBy(_._1)))
     spark.stop()
   }
 }

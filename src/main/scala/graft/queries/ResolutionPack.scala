@@ -140,7 +140,7 @@ object ResolutionPack extends QueryPack {
     // cold single-shot's dominant stage), then top-2 via a 15-element
     // array_sort inside the per-record aggregate (no row_number
     // window) — same (df, g) values and tie order, bit-identical rare
-    // set (ColdProbe A/B + oracle both pinned).
+    // set (cold A/B + oracle both pinned).
     val gdf = gr.groupBy("g").agg(count(lit(1)).as("df"))
     val rare = gr.join(broadcast(gdf), Seq("g"))
       .groupBy("rec_id")

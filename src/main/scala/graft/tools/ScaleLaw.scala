@@ -4,7 +4,7 @@ import scala.collection.immutable.ListMap
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{DoubleType, FloatType}
-import graft.Sessions
+import graft.{QueryLoop, Sessions}
 import RuleToggle.Toggle
 
 /** One scale-law harness. Each injected Catalyst rule (and each
@@ -93,16 +93,6 @@ object ScaleLaw {
     for (x <- o.get(a); y <- o.get(b))
       require(!missing(x, y), s"arm $a has rows arm $b lacks")
 
-  private def json(v: Any): String = v match {
-    case null | None => "null"
-    case Some(x) => json(x)
-    case d: Double => if (d.isNaN || d.isInfinite) "null" else f"$d%.4f"
-    case s: String => "\"" + s + "\""
-    case m: Seq[_] => m.map { case (k, x) => "\"" + k + "\":" + json(x) }
-      .mkString("{", ",", "}")
-    case x => x.toString
-  }
-
   private def runArm[C](spark: SparkSession, law: Law[C], k: Int,
       arm: Arm[C], c: C): (DataFrame, Long, Double) =
     RuleToggle.within(spark, arm.toggles ++ arm.derived(c)) {
@@ -135,16 +125,14 @@ object ScaleLaw {
             s"${law.name} k=$k: ${e.getMessage}", e) }
       val arms = ran.map { case (n, (_, rows, sec)) =>
         n -> Seq("rows" -> rows, "sec" -> sec) }
-      val line = json(Seq("law" -> law.name,
+      val line = QueryLoop.json(Seq("law" -> law.name,
         "cpus" -> spark.sparkContext.defaultParallelism,
         "sf" -> law.dir.map(_ => dir), "k" -> k) ++ stats ++
         Seq("arms" -> arms) ++ checked)
       println(line)
       line
     } finally {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
+      QueryLoop.release(spark)
     }
   }
 
